@@ -7,11 +7,12 @@
         [--buckets 4096] [--page-split-bytes N] [--salt 0]
 
 Reads the interleaved documents table (doc_id, spans[]) plus the media
-payload side table, runs the fused extraction pipeline, and writes
-extracted_spans through the manifest-checkpointed sink — a killed run
-re-submitted with the SAME --snapshot resumes at bucket granularity
-(completed buckets are anti-joined away; orphan files from crashed epochs
-stay invisible to readers).
+payload side table, runs the shared-FIELDS extraction pipeline
+(`build_pipeline`), and writes extracted_spans through the
+manifest-checkpointed sink — a killed run re-submitted with the SAME
+--snapshot resumes at bucket granularity (completed buckets are
+anti-joined away; orphan files from crashed epochs stay invisible to
+readers).
 
 Local smoke:
     python jobs/extract.py --docs .bench/synth_5000/documents \

@@ -318,14 +318,3 @@ def spans_from_fields(fields: pd.DataFrame) -> pd.DataFrame:
             seq += 1
     return pd.DataFrame(out, columns=SPAN_ROW_COLUMNS)
 
-
-def process_batch(
-    batch: pd.DataFrame,
-    as_of_date: date = DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-) -> pd.DataFrame:
-    """Convenience composition: raw span rows (with payload) → span rows."""
-    if len(batch) == 0:
-        return pd.DataFrame(columns=SPAN_ROW_COLUMNS)
-    return spans_from_fields(fields_batch(resolve_batch(batch), as_of_date, companies, suppliers))

@@ -10,7 +10,7 @@ declarative DataFrame job:
       │       groupBy(doc_id, offset).applyInPandas(reassemble)
       ├─ mapInPandas(kernel.fields_batch)  — vectorized extraction
       │       (T*, X*, D*, M* families + merge lattice)     (EP1 steps 4-9)
-      ├─ extracted_spans: groupBy(doc_id).applyInPandas(sort offset, seq)
+      ├─ extracted_spans: JVM span rows, collect_list+array_sort per doc_id
       └─ invoices: typed flat projection (DecimalType money, DateType)
 
 All Python stages are Arrow-batched (`mapInPandas` / `applyInPandas`);
@@ -73,18 +73,6 @@ _RESOLVED_SCHEMA = T.StructType(
         T.StructField("content", T.StringType(), True),
     ]
 )
-
-SPAN_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-    ]
-)
-
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) → one row per span."""
@@ -161,17 +149,9 @@ def _fields_map(
     suppliers: list[dict], emit_raw_text: bool = False,
 ) -> Iterator[pd.DataFrame]:
     for batch in it:
-        yield assemble.fields_batch(
-            assemble.resolve_batch(batch), as_of, companies, suppliers,
-            emit_raw_text=emit_raw_text,
-        )
-
-
-def _fields_map_resolved(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict],
-    suppliers: list[dict], emit_raw_text: bool = False,
-) -> Iterator[pd.DataFrame]:
-    for batch in it:
+        # rows reassembled by the page-split path arrive already resolved
+        if "content" not in batch.columns:
+            batch = assemble.resolve_batch(batch)
         yield assemble.fields_batch(
             batch, as_of, companies, suppliers, emit_raw_text=emit_raw_text
         )
@@ -180,28 +160,6 @@ def _fields_map_resolved(
 def _split_pages_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for batch in it:
         yield assemble.split_pdf_pages(batch)
-
-
-def _spans_map(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for batch in it:
-        yield assemble.spans_from_fields(batch)
-
-
-def _process_map(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict], suppliers: list[dict]
-) -> Iterator[pd.DataFrame]:
-    """Fused resolve→fields→spans in ONE Python stage (one Arrow hop)."""
-    for batch in it:
-        yield assemble.process_batch(batch, as_of, companies, suppliers)
-
-
-def _process_map_resolved(
-    it: Iterator[pd.DataFrame], as_of: date, companies: list[dict], suppliers: list[dict]
-) -> Iterator[pd.DataFrame]:
-    for batch in it:
-        yield assemble.spans_from_fields(
-            assemble.fields_batch(batch, as_of, companies, suppliers)
-        )
 
 
 def extract_fields(
@@ -220,7 +178,7 @@ def extract_fields(
     Catalyst pushes the filters below the exchange, so the exchanges stop
     being canonically identical and ReuseExchange never fires (verified on
     the executed AQE plan). For workloads where per-page cost is heavy
-    (real OCR rasterization), use extract_spans_paged.
+    (real OCR rasterization), use extract_fields_paged.
     """
     return spans_with_payload.mapInPandas(
         partial(
@@ -234,81 +192,6 @@ def extract_fields(
     )
 
 
-def _split_small_big(spans_with_payload: DataFrame, oversize_bytes: int):
-    is_big_pdf = (F.col("kind") == "pdf") & (
-        F.length(F.col("payload")) > F.lit(oversize_bytes)
-    )
-    small = spans_with_payload.filter(~F.coalesce(is_big_pdf, F.lit(False)))
-    big = spans_with_payload.filter(F.coalesce(is_big_pdf, F.lit(False)))
-    return small, big
-
-
-def extract_spans_fused(
-    spans_with_payload: DataFrame,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-) -> DataFrame:
-    """Span rows (+payload) → output span rows, single fused Python stage
-    (resolve+extract+spans in one Arrow hop), single-pass dataflow (see
-    extract_fields for why branching costs a full re-scan)."""
-    return spans_with_payload.mapInPandas(
-        partial(
-            _process_map,
-            as_of=as_of,
-            companies=companies or [],
-            suppliers=suppliers or [],
-        ),
-        schema=SPAN_ROWS_SCHEMA,
-    )
-
-
-def extract_spans_paged(
-    spans_with_payload: DataFrame,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    oversize_bytes: int = OVERSIZE_PAYLOAD_BYTES,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Skew-mitigating variant (north rule / SURVEY.md §7.3): oversized PDF
-    payloads are split into page-level rows processed as independent
-    sub-tasks, then re-assembled per (doc_id, offset) sorted by page_no.
-
-    Use when per-page processing is expensive (real OCR: seconds/page) —
-    one 500-page document then costs 500 parallel sub-tasks instead of
-    pinning a core for the whole stage. Costs one extra scan of the input
-    (the small/big branch split defeats exchange reuse) and a page-level
-    shuffle, so the cheap-kernel default is extract_spans_fused.
-    """
-    companies = companies or []
-    suppliers = suppliers or []
-    if num_partitions is None:
-        num_partitions = int(
-            spans_with_payload.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    small, big = _split_small_big(spans_with_payload, oversize_bytes)
-    small_spans = small.mapInPandas(
-        partial(_process_map, as_of=as_of, companies=companies, suppliers=suppliers),
-        schema=SPAN_ROWS_SCHEMA,
-    )
-    # Explicit partition count on the reassembly exchange: it satisfies the
-    # groupBy's ClusteredDistribution (no second shuffle) AND opts out of
-    # AQE byte-based coalescing, which would funnel the CPU-bound
-    # reassemble+extract work for every monster PDF into one task.
-    big_resolved = (
-        big.mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
-        .repartition(num_partitions, "doc_id", "offset")
-        .groupBy("doc_id", "offset")
-        .applyInPandas(assemble.reassemble_pages, schema=_RESOLVED_SCHEMA)
-    )
-    big_spans = big_resolved.mapInPandas(
-        partial(_process_map_resolved, as_of=as_of, companies=companies, suppliers=suppliers),
-        schema=SPAN_ROWS_SCHEMA,
-    )
-    return small_spans.unionByName(big_spans)
-
-
 def extract_fields_paged(
     spans_with_payload: DataFrame,
     as_of: date = assemble.DEFAULT_AS_OF,
@@ -318,48 +201,49 @@ def extract_fields_paged(
     num_partitions: int | None = None,
     with_raw_text: bool = False,
 ) -> DataFrame:
-    """FIELDS rows with the oversized-PDF page-split skew path (the FIELDS
-    twin of extract_spans_paged): oversized payloads split into page rows,
-    reassembled per (doc_id, offset), then the same kernel — so the shared
-    single-FIELDS pipeline covers the paged configuration too (round 1's
-    invoices branch silently ignored page_split_bytes)."""
-    companies = companies or []
-    suppliers = suppliers or []
+    """FIELDS rows with the oversized-PDF page-split skew path (north rule /
+    SURVEY.md §7.3): oversized PDF payloads split into page rows processed
+    as independent sub-tasks, reassembled per (doc_id, offset) sorted by
+    page_no, then the same kernel — so the shared single-FIELDS pipeline
+    covers the paged configuration too.
+
+    Use when per-page processing is expensive (real OCR: seconds/page) —
+    one 500-page document then costs 500 parallel sub-tasks instead of
+    pinning a core for the whole stage. Costs one extra scan of the input
+    (the small/big branch split defeats exchange reuse) and a page-level
+    shuffle, so the cheap-kernel default is extract_fields.
+    """
     if num_partitions is None:
         num_partitions = int(
             spans_with_payload.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
-    small, big = _split_small_big(spans_with_payload, oversize_bytes)
-    small_fields = small.mapInPandas(
-        partial(_fields_map, as_of=as_of, companies=companies,
-                suppliers=suppliers, emit_raw_text=with_raw_text),
-        schema=FIELDS_ROW_SCHEMA,
+    fields_map = partial(
+        _fields_map,
+        as_of=as_of,
+        companies=companies or [],
+        suppliers=suppliers or [],
+        emit_raw_text=with_raw_text,
     )
-    big_resolved = (
-        big.mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
+    is_big_pdf = F.coalesce(
+        (F.col("kind") == "pdf") & (F.length(F.col("payload")) > F.lit(oversize_bytes)),
+        F.lit(False),
+    )
+    small_fields = spans_with_payload.filter(~is_big_pdf).mapInPandas(
+        fields_map, schema=FIELDS_ROW_SCHEMA
+    )
+    # Explicit partition count on the reassembly exchange: it satisfies the
+    # groupBy's ClusteredDistribution (no second shuffle) AND opts out of
+    # AQE byte-based coalescing, which would funnel the CPU-bound
+    # reassemble+extract work for every monster PDF into one task.
+    big_fields = (
+        spans_with_payload.filter(is_big_pdf)
+        .mapInPandas(_split_pages_map, schema=_PAGE_SCHEMA)
         .repartition(num_partitions, "doc_id", "offset")
         .groupBy("doc_id", "offset")
         .applyInPandas(assemble.reassemble_pages, schema=_RESOLVED_SCHEMA)
-    )
-    big_fields = big_resolved.mapInPandas(
-        partial(_fields_map_resolved, as_of=as_of, companies=companies,
-                suppliers=suppliers, emit_raw_text=with_raw_text),
-        schema=FIELDS_ROW_SCHEMA,
+        .mapInPandas(fields_map, schema=FIELDS_ROW_SCHEMA)
     )
     return small_fields.unionByName(big_fields)
-
-
-def assemble_extracted_spans(fields_rows: DataFrame) -> DataFrame:
-    """FIELDS rows → extracted_spans(doc_id, spans[]) ordered by (offset, seq).
-
-    JVM-native reassembly: collect_list of (offset, seq, …) structs,
-    array_sort (struct comparison orders by leading fields → (offset, seq),
-    unique per doc), then a transform projecting the SPAN shape. Replaces a
-    per-group applyInPandas — partial aggregation happens map-side and no
-    Python worker touches the reassembly path.
-    """
-    span_rows = fields_rows.mapInPandas(_spans_map, schema=SPAN_ROWS_SCHEMA)
-    return assemble_spans_table(span_rows)
 
 
 def span_rows_from_fields(fields_rows: DataFrame) -> DataFrame:
@@ -595,9 +479,10 @@ def build_pipeline(
     rows — a caller materializing both paid the dominant extraction cost
     twice, and the invoices branch ignored ``page_split_bytes`` entirely
     (VERDICT r01 / ADVICE r01).  Now a single FIELDS-producing stage
-    (paged or not) is persisted and both outputs derive from it: spans
-    via the cheap spans_from_fields projection stage, invoices via a pure
-    JVM projection.
+    (paged or not) is persisted and every output derives from it by a
+    pure JVM projection: spans via span_rows_from_fields, invoices via
+    invoices_from_fields.  Batch jobs and each streaming micro-batch run
+    this same dataflow.
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -692,34 +577,6 @@ def build_pipeline_staged(
     )
     committed = read_committed(spark, staging_dir, input_snapshot)
     return _frames_from_fields(committed)
-
-
-def run_pipeline(
-    spark: SparkSession,
-    documents: DataFrame,
-    media: DataFrame | None,
-    as_of: date = assemble.DEFAULT_AS_OF,
-    companies: list[dict] | None = None,
-    suppliers: list[dict] | None = None,
-    num_partitions: int | None = None,
-    salt: int = 0,
-    page_split_bytes: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """documents/media → (extracted_spans, invoices) — see build_pipeline
-    (the shared-FIELDS dataflow; use build_pipeline directly when you need
-    the fields frame or its unpersist handle)."""
-    frames = build_pipeline(
-        spark,
-        documents,
-        media,
-        as_of=as_of,
-        companies=companies,
-        suppliers=suppliers,
-        num_partitions=num_partitions,
-        salt=salt,
-        page_split_bytes=page_split_bytes,
-    )
-    return frames.extracted_spans, frames.invoices
 
 
 # --------------------------------------------------------------------------

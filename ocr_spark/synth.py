@@ -198,7 +198,11 @@ def expected_spans(
                 for s in d["spans"]
             ]
         )
-        out = assemble.process_batch(batch, companies=companies, suppliers=suppliers)
+        out = assemble.spans_from_fields(
+            assemble.fields_batch(
+                assemble.resolve_batch(batch), companies=companies, suppliers=suppliers
+            )
+        )
         out = out.sort_values(["offset", "seq"])
         yield d["doc_id"], [
             {"kind": r["kind"], "text": r["text"], "media_ref": r["media_ref"], "offset": int(r["offset"])}

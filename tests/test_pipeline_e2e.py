@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from ocr_spark.corpus import COMPANIES, SUPPLIERS
-from ocr_spark.operators.extract import run_pipeline
+from ocr_spark.operators.extract import build_pipeline
 from ocr_spark.schemas import DOCUMENTS, MEDIA
 from ocr_spark.synth import expected_spans, synth_frames
 
@@ -33,10 +33,12 @@ def synth_dfs(spark):
 @pytest.fixture(scope="module")
 def pipeline_out(spark, synth_dfs):
     docs, media = synth_dfs
-    extracted, invoices = run_pipeline(
+    frames = build_pipeline(
         spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
     )
-    return extracted.collect(), invoices.toPandas()
+    out = frames.extracted_spans.collect(), frames.invoices.toPandas()
+    frames.unpersist()
+    return out
 
 
 def _expected() -> dict[str, list[dict]]:
@@ -73,17 +75,19 @@ def test_paged_path_span_equality(spark, synth_dfs):
     """The distributed page-split path (north rule skew mitigation) must
     produce byte-identical spans to the single-pass path."""
     docs, media = synth_dfs
-    extracted, _ = run_pipeline(
+    frames = build_pipeline(
         spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
         num_partitions=8, page_split_bytes=64 * 1024,
     )
+    extracted_rows = frames.extracted_spans.collect()
+    frames.unpersist()
     expected = _expected()
     got = {
         r["doc_id"]: [
             {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"], "offset": s["offset"]}
             for s in r["spans"]
         ]
-        for r in extracted.collect()
+        for r in extracted_rows
     }
     assert set(got) == set(expected)
     for doc_id, exp in expected.items():
@@ -165,13 +169,18 @@ def test_paged_invoices_honor_page_split(spark, synth_dfs):
     page_split_bytes; the shared-FIELDS pipeline routes both outputs
     through the paged kernel, so invoices must be identical either way."""
     docs, media = synth_dfs
-    base = run_pipeline(
-        spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS, num_partitions=8
-    )[1].toPandas().sort_values("invoice_id").reset_index(drop=True)
-    paged = run_pipeline(
-        spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
-        num_partitions=8, page_split_bytes=64 * 1024,
-    )[1].toPandas().sort_values("invoice_id").reset_index(drop=True)
+
+    def invoices(**kw):
+        frames = build_pipeline(
+            spark, docs, media, companies=COMPANIES, suppliers=SUPPLIERS,
+            num_partitions=8, **kw,
+        )
+        out = frames.invoices.toPandas()
+        frames.unpersist()
+        return out.sort_values("invoice_id").reset_index(drop=True)
+
+    base = invoices()
+    paged = invoices(page_split_bytes=64 * 1024)
     assert base.equals(paged)
 
 

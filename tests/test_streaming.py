@@ -1,4 +1,4 @@
-"""Streaming surface: the fused kernel under Structured Streaming must
+"""Streaming surface: the batch dataflow under Structured Streaming must
 produce the identical span output as the batch pipeline (SURVEY.md §2.9
 drop-in claim), through the manifest-checkpointed sink."""
 
@@ -27,6 +27,7 @@ def test_stream_matches_batch_goldens(spark, tmp_path):
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
+    persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     run_stream(
         spark,
         docs_dir + "/documents",
@@ -37,6 +38,8 @@ def test_stream_matches_batch_goldens(spark, tmp_path):
         suppliers=SUPPLIERS,
         available_now=True,
     )
+    # each micro-batch's persisted FIELDS frame is released by the sink
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted_before
 
     committed = read_committed(spark, out)
     got = {
